@@ -22,21 +22,10 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
+from bench import HEADLINE  # noqa: E402  (the frozen bench's query list)
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "orders_rank_in_customer",
-    "events_hourly_by_type",
-    "emb_context_preservation",
-    "emb_cosine_topk",
-    "doc_lang_quality",
-    "extract_roundtrip",
-    "chunk_simple",
-    "dedup_minhash_lsh",
-]
 
 
 def log(msg: str) -> None:

@@ -2,69 +2,73 @@
 
 The reference creates a DURABLE vector collection and searches it in a
 separate process later (ref vector_db.py:208-229 creates the persistent
-Milvus collection; :350-400 searches it). The Spark-first equivalent of
-"the collection" is a pair of parquet artifact tables per index:
+Milvus collection; :350-400 searches it). Here "the collection" is the
+index's artifacts written as parquet tables:
 
     {path}/centroids/     (cell:int, vec:array<double>)      — KBs
     {path}/assignments/   (vec_id, embedding, cell=...)      — the corpus,
                           PARTITIONED BY cell
 
-so a search job reads the tiny centroid table, computes each query's
-probe cells, and scans ONLY those cells' partitions — the corpus is
-never re-embedded, re-assigned, or even fully re-read. Probe-cell
-enumeration is always a bounded collect (distinct probe cells <= n_cells
-regardless of query-batch size), so the cell filter is a STATIC
-partition-pruning predicate — at 100 TB a 4-of-64-cell probe reads
-~6% of the index bytes, with no reliance on dynamic pruning heuristics.
+(LSH: ``hyperplanes/`` and a bucket-partitioned ``assignments/``; PQ:
+``codebooks/`` and ``codes/``.)
 
-The LSH variant persists the hyperplane matrix + bucketed corpus the
-same way (buckets as partitions).
+There is one search core: the in-memory engines in ``similarity.py``
+hold these same artifacts as DataFrames, and the searches here load them
+and call the same probe -> broadcast join -> score -> rank code. The one
+step added here is the partition prune: the distinct probe keys are a
+bounded collect (<= n_cells whatever the batch size), so the key filter
+is a STATIC partition-pruning predicate — a 4-of-64-cell probe reads ~6%
+of the index bytes. The corpus is never re-assigned or fully re-read.
 
-Search results are pinned equal to the in-memory operators
-(`topk_ivf`/`topk_lsh`) by tests/test_ann_index.py, and the exhaustive-
-probe configuration is oracle-checked end-to-end by the
-``ann_ivf_persist`` driver query.
+tests/test_ann_index.py pins save -> load fidelity (a loaded index
+answers exactly as the in-memory one it was saved from) and the pruned
+scan plan; the exhaustive-probe configuration is oracle-checked
+end-to-end by the ``ann_ivf_persist`` driver query.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine
+from .quantize import pq_encode_udf, topk_pq_adc
 from .similarity import (
-    _cell_assign_udf,
-    _hyperplanes,
-    _probe_cells_udf,
-    bucket_udf_for,
-    lsh_bucket,
+    _ivf_index,
+    _ivf_probes,
+    _lsh_index,
+    _lsh_probes,
+    _probe_join_topk,
 )
 
 
-def _resolve_centroids(
-    corpus: DataFrame,
-    n_cells: int,
-    centroids: "np.ndarray | None",
-    corpus_id: str,
-    vec_col: str,
-) -> "np.ndarray":
-    if centroids is not None:
-        return np.asarray(centroids, dtype=np.float64)
-    # default seeds by hash order of the id: deterministic AND spread over
-    # the corpus (first-N-by-id seeds cluster whenever ids correlate with
-    # insert order — round-5 verdict flag)
-    return np.array(
-        [
-            [float(x) for x in r[0]]
-            for r in corpus.select(vec_col, corpus_id)
-            .orderBy(F.xxhash64(corpus_id), corpus_id)
-            .limit(n_cells)
-            .select(vec_col)
-            .collect()
-        ],
-        dtype=np.float64,
+def _write_matrix(spark: SparkSession, mat: "np.ndarray", path: str, key: str) -> None:
+    """A model matrix as a one-file ``(key int, vec array<double>)`` table."""
+    rows = [(i, [float(x) for x in row]) for i, row in enumerate(mat)]
+    df = spark.createDataFrame(rows, f"{key} int, vec array<double>")
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def _read_matrix(spark: SparkSession, path: str, key: str) -> "np.ndarray":
+    """Inverse of :func:`_write_matrix` (tiny bounded collect)."""
+    rows = spark.read.parquet(path).orderBy(key).collect()
+    return np.array([r["vec"] for r in rows], dtype=np.float64)
+
+
+def _search_probed(
+    spark: SparkSession, path: str, probes: DataFrame, key: str, k: int,
+    query_id: str, corpus_id: str, vec_col: str,
+) -> DataFrame:
+    """Scan only the probed partitions of ``{path}/assignments``, then the
+    search step the in-memory engines run. The distinct-key collect is one tiny job
+    that turns the join into a statically pruned scan (only the probed
+    partitions are listed, let alone read); an in-memory index has no
+    files to prune, so only this path pays it."""
+    keys = sorted(int(r[key]) for r in probes.select(key).distinct().collect())
+    assigned = spark.read.parquet(f"{path}/assignments").filter(
+        F.col(key).isin(keys)
     )
+    return _probe_join_topk(assigned, probes, key, k, query_id, corpus_id, vec_col)
 
 
 def save_ivf_index(
@@ -79,31 +83,17 @@ def save_ivf_index(
     corpus assignments. One pass over the corpus (the assignment UDF),
     one partitioned write — the pay-once cost that every later search
     job amortizes. Returns the centroid matrix."""
-    spark = corpus.sparkSession
-    cents = _resolve_centroids(corpus, n_cells, centroids, corpus_id, vec_col)
-    norms = np.linalg.norm(cents, axis=1)
-    norms[norms == 0] = 1.0
-    cent_rows = [(i, [float(x) for x in row]) for i, row in enumerate(cents)]
-    spark.createDataFrame(
-        cent_rows, "cell int, vec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    (
-        corpus.select(
-            corpus_id,
-            vec_col,
-            _cell_assign_udf(cents, norms)(F.col(vec_col)).alias("cell"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/assignments")
+    cents, assigned = _ivf_index(corpus, n_cells, centroids, corpus_id, vec_col)
+    _write_matrix(corpus.sparkSession, cents, f"{path}/centroids", "cell")
+    assigned.write.mode("overwrite").partitionBy("cell").parquet(
+        f"{path}/assignments"
     )
     return cents
 
 
 def load_ivf_centroids(spark: SparkSession, path: str) -> "np.ndarray":
     """Centroid matrix from the artifact table (tiny bounded collect)."""
-    rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    return np.array([r["vec"] for r in rows], dtype=np.float64)
+    return _read_matrix(spark, f"{path}/centroids", "cell")
 
 
 def topk_ivf_indexed(
@@ -121,38 +111,10 @@ def topk_ivf_indexed(
     probe join + per-query rank. The corpus side of the plan contains no
     Python stage and scans only the probed cells' partitions."""
     cents = load_ivf_centroids(spark, path)
-    norms = np.linalg.norm(cents, axis=1)
-    norms[norms == 0] = 1.0
-
-    probes = (
-        queries.select(
-            F.col(query_id),
-            _probe_cells_udf(cents, norms, n_probe)(F.col(vec_col)).alias("_cells"),
-        )
-        .select(F.col(query_id), F.explode_outer("_cells").alias("cell"))
-        .filter(F.col("cell").isNotNull())
+    probes = _ivf_probes(queries, cents, n_probe, query_id, vec_col)
+    return _search_probed(
+        spark, path, probes, "cell", k, query_id, corpus_id, vec_col
     )
-    # distinct probe cells are bounded by n_cells no matter how many
-    # queries — a tiny job that turns the join into a statically pruned
-    # scan (only the probed partitions are listed, let alone read)
-    cells = sorted(r["cell"] for r in probes.select("cell").distinct().collect())
-    assigned = spark.read.parquet(f"{path}/assignments").filter(
-        F.col("cell").isin([int(c) for c in cells])
-    )
-    qvecs = queries.select(F.col(query_id), F.col(vec_col).alias("_qvec"))
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .join(F.broadcast(qvecs), query_id)
-        .select(
-            query_id,
-            corpus_id,
-            F.round(
-                F.coalesce(cosine(F.col(vec_col), F.col("_qvec")), F.lit(0.0)), 6
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def save_pq_index(
@@ -167,8 +129,6 @@ def save_pq_index(
     codes. A search job then reads ONLY (id, codes) — float vectors never
     hit disk twice nor the search scan at all (the PQ storage win,
     ~dim*4/m smaller)."""
-    from .quantize import pq_encode_udf
-
     spark = corpus.sparkSession
     books = np.asarray(codebooks, dtype=np.float64)
     m, k, dsub = books.shape
@@ -212,8 +172,6 @@ def topk_pq_indexed(
     """Search a persisted PQ index by asymmetric distance: the scan side
     is the codes table alone (plan-pinned — its ReadSchema carries no
     embedding column), the codebooks ride the scoring UDF's closure."""
-    from .quantize import topk_pq_adc
-
     books = load_pq_codebooks(spark, path)
     codes = spark.read.parquet(f"{path}/codes")
     return topk_pq_adc(
@@ -234,21 +192,10 @@ def save_lsh_index(
     """Persist an LSH index: hyperplane matrix (derivable from the seed,
     stored anyway so a reader never depends on RNG reproducibility) +
     bucket-partitioned corpus."""
-    spark = corpus.sparkSession
-    planes = _hyperplanes(dim, n_planes, seed)
-    plane_rows = [(i, [float(x) for x in row]) for i, row in enumerate(planes)]
-    spark.createDataFrame(
-        plane_rows, "plane int, vec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/hyperplanes")
-    (
-        corpus.select(
-            corpus_id,
-            vec_col,
-            lsh_bucket(F.col(vec_col), dim, n_planes, seed).alias("bucket"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/assignments")
+    planes, assigned = _lsh_index(corpus, dim, n_planes, seed, corpus_id, vec_col)
+    _write_matrix(corpus.sparkSession, planes, f"{path}/hyperplanes", "plane")
+    assigned.write.mode("overwrite").partitionBy("bucket").parquet(
+        f"{path}/assignments"
     )
 
 
@@ -264,33 +211,8 @@ def topk_lsh_indexed(
 ) -> DataFrame:
     """Search a persisted LSH index (multi-probe supported); the corpus is
     bucketed once at save time and only probed buckets are scanned."""
-    planes_rows = spark.read.parquet(f"{path}/hyperplanes").orderBy("plane").collect()
-    planes = np.array([r["vec"] for r in planes_rows], dtype=np.float64)
-    bucket_of = bucket_udf_for(planes)
-
-    base = F.col("_b0")
-    probe_arr = F.array(
-        base, *[base.bitwiseXOR(F.lit(1 << i)) for i in range(n_probe_bits)]
+    planes = _read_matrix(spark, f"{path}/hyperplanes", "plane")
+    probes = _lsh_probes(queries, planes, n_probe_bits, query_id, vec_col)
+    return _search_probed(
+        spark, path, probes, "bucket", k, query_id, corpus_id, vec_col
     )
-    q = (
-        queries.select(
-            F.col(query_id),
-            F.col(vec_col).alias("_qvec"),
-            bucket_of(F.col(vec_col)).alias("_b0"),
-        )
-        .filter(F.col("_b0").isNotNull())
-        .select(F.col(query_id), F.col("_qvec"), F.explode(probe_arr).alias("bucket"))
-    )
-    buckets = sorted(r["bucket"] for r in q.select("bucket").distinct().collect())
-    assigned = spark.read.parquet(f"{path}/assignments").filter(
-        F.col("bucket").isin([int(b) for b in buckets])
-    )
-    scored = assigned.join(F.broadcast(q), "bucket").select(
-        query_id,
-        corpus_id,
-        F.round(
-            F.coalesce(cosine(F.col(vec_col), F.col("_qvec")), F.lit(0.0)), 6
-        ).alias("score"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

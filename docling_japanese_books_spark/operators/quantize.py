@@ -72,6 +72,8 @@ import pandas as pd  # noqa: E402
 from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
 
+from .similarity import _rank_top_k, _stack  # noqa: E402
+
 
 def train_pq_codebooks(
     sample: "np.ndarray", m: int, k: int = 16, n_iters: int = 5
@@ -118,8 +120,6 @@ def pq_encode_udf(codebooks: "np.ndarray"):
     def encode(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype="object")
-        from .similarity import _stack
-
         x = _stack(v, m * dsub)
         valid = np.isfinite(x).all(axis=1)
         codes = np.zeros((len(x), m), dtype=np.int32)
@@ -165,8 +165,6 @@ def topk_pq_adc(
     def adc(qv: pd.Series, codes: pd.Series) -> pd.Series:
         if len(qv) == 0:
             return pd.Series([], dtype="float64")
-        from .similarity import _stack
-
         q = _stack(qv, m * dsub)
         luts: dict = {}
         out = np.full(len(qv), np.nan)
@@ -188,15 +186,9 @@ def topk_pq_adc(
             out[i] = lut[np.arange(m), c].sum()
         return pd.Series(out)
 
-    from pyspark.sql import Window
-
     q = queries.select(F.col(query_id), F.col(vec_col).alias("_qvec"))
-    scored = corpus_codes.crossJoin(F.broadcast(q)).select(
-        query_id,
-        corpus_id,
-        F.round(adc(F.col("_qvec"), F.col(codes_col)), 6).alias("adc_dist"),
-    ).filter(F.col("adc_dist").isNotNull())
-    w = Window.partitionBy(query_id).orderBy(F.asc("adc_dist"), F.asc(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    pairs = corpus_codes.crossJoin(F.broadcast(q))
+    return _rank_top_k(
+        pairs, adc(F.col("_qvec"), F.col(codes_col)), k, query_id, corpus_id,
+        name="adc_dist", ascending=True,
     )

@@ -18,7 +18,7 @@ Spark shape (chosen for the oracle AND the 100 TB plan):
   same expression the oracle-green top-k queries use), argmax via a
   partial-aggregable ``max(struct(score, -cid))`` — no window, no Python,
   map-side combine before the one shuffle on the corpus id. A numpy
-  closure-matrix UDF (ann_index.py's IVF path) is ~10x faster per row at
+  closure-matrix UDF (similarity.py's IVF path) is ~10x faster per row at
   large k but accumulates in SIMD order, which can flip a 6-dp rounded
   score at the boundary; with k <= a few hundred the 8-way join is scan
   bound anyway, and exact DuckDB parity is worth more here.
@@ -52,8 +52,9 @@ def first_k_centroids(
 ) -> DataFrame:
     """Deterministic centroid pick: the embeddings of the k smallest ids,
     numbered 0..k-1 in id order. Trivially reproducible by any external
-    oracle; for production clustering quality use ann_index.train_ivf's
-    hash-ordered sample instead (any (cid, vec) frame plugs in).
+    oracle; for production clustering quality seed from the hash-ordered
+    sample of ``similarity._seed_centroids`` (the one rule the IVF engines
+    and ``train_centroids`` share) instead — any (cid, vec) frame plugs in.
 
     The rank is a count-of-smaller-ids over the k-row limited frame — a
     bounded k x k broadcast join instead of a single-partition window, so

@@ -1,11 +1,14 @@
 """Similarity search over embedding columns (J2/T1 at batch scale).
 
-Brute-force cosine top-k is the exactness baseline (broadcast the query
-batch, codegen'd array math, per-query window top-k). The scale path is
-random-hyperplane LSH: bucket corpus and queries by sign-bit signatures,
-join on bucket, rank within — turning an O(Q x N) cross join into a
-shuffle on bucket keys. Hyperplanes are deterministic (seeded numpy),
-broadcast as plan literals.
+One search core serves every top-k engine. Brute force (broadcast query
+batch x corpus) is the exactness baseline. IVF and LSH search an index
+held as two artifacts: a model matrix (centroids or hyperplanes, riding
+in pandas-UDF closures so the plan stays O(1) in cells x dims) and the
+corpus with its cell or bucket column. Queries compute their probe keys
+executor-side; one broadcast join on the key yields candidate pairs. The
+engines here hold the artifacts as DataFrames; ``ann_index.py`` persists
+them as parquet and searches the loaded copy with the same probe and
+join code. Every engine, PQ-ADC included, ends in :func:`_rank_top_k`.
 """
 
 from __future__ import annotations
@@ -57,6 +60,34 @@ def _stack(v: "pd.Series", dim: "int | None" = None) -> "np.ndarray":
     return out
 
 
+def _rank_top_k(
+    pairs: DataFrame, score: Column, k: int, query_id: str, corpus_id: str,
+    name: str = "score", ascending: bool = False,
+) -> DataFrame:
+    """The one score-and-rank rule of every top-k engine: round the score
+    to 6 dp BEFORE ranking, order per query by score (descending for a
+    similarity, ascending for a distance) then ascending corpus id, keep
+    rank <= k. Ranking on the rounded value means a 1e-9 near-tie can
+    never flip against an oracle that compares rounded values. A pair
+    with a null score never ranks.
+
+    Scale: the only shuffle is the per-query rank, keyed by query."""
+    scored = pairs.select(
+        query_id, corpus_id, F.round(score, 6).alias(name)
+    ).filter(F.col(name).isNotNull())
+    order = F.asc(name) if ascending else F.desc(name)
+    w = Window.partitionBy(query_id).orderBy(order, F.asc(corpus_id))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _cosine_score(vec_col: str) -> Column:
+    """Cosine of a corpus vector against the pair's query vector
+    ``_qvec``; a pair with a null or mismatched vector scores 0."""
+    return F.coalesce(cosine(F.col(vec_col), F.col("_qvec")), F.lit(0.0))
+
+
 def topk_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
@@ -65,44 +96,60 @@ def topk_bruteforce(
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k per query: broadcast(queries) x corpus + window rank.
+    """Exact top-k per query: broadcast(queries) x corpus + the shared
+    rank rule. Queries are the small side by construction (a search
+    batch); the corpus never shuffles."""
+    q = queries.select(F.col(query_id), F.col(vec_col).alias("_qvec"))
+    pairs = corpus.crossJoin(F.broadcast(q))
+    return _rank_top_k(pairs, _cosine_score(vec_col), k, query_id, corpus_id)
 
-    Scores are rounded to 6 decimals BEFORE ranking (ties broken by corpus
-    id) so rank order is reproducible against any oracle comparing rounded
-    values — float ulps can never flip a near-tie.
 
-    Scale: queries are the small side by construction (a search batch);
-    corpus never shuffles — only the per-query rank does, keyed by query."""
-    q = queries.select(
-        F.col(query_id), F.col(vec_col).alias("_qvec")
+def _probe_join_topk(
+    assigned: DataFrame, probes: DataFrame, key: str, k: int,
+    query_id: str, corpus_id: str, vec_col: str,
+) -> DataFrame:
+    """The IVF/LSH search step, in memory and persisted alike: the
+    assigned corpus ``(corpus_id, vec_col, key)`` joins the broadcast
+    probe rows ``(query_id, _qvec, key)`` on the cell/bucket key, then
+    the shared rank rule. The corpus never moves."""
+    pairs = assigned.join(F.broadcast(probes), key)
+    return _rank_top_k(pairs, _cosine_score(vec_col), k, query_id, corpus_id)
+
+
+def _seed_centroids(
+    corpus: DataFrame, n_cells: int, corpus_id: str, vec_col: str
+) -> "np.ndarray":
+    """The one centroid-seeding rule: the vectors of the first ``n_cells``
+    rows in xxhash64 order of the id (ties by id). Deterministic AND spread
+    over the corpus; first-N-by-id seeds cluster whenever ids follow
+    insert order. Null embeddings are never seeds."""
+    rows = (
+        corpus.filter(F.col(vec_col).isNotNull())
+        .select(vec_col, corpus_id)
+        .orderBy(F.xxhash64(corpus_id), corpus_id)
+        .limit(n_cells)
+        .select(vec_col)
+        .collect()
     )
-    scored = corpus.crossJoin(F.broadcast(q)).select(
-        query_id,
-        corpus_id,
-        # rank on the ROUNDED score so tie order matches any oracle that
-        # compares rounded values — a 1e-9 near-tie must not flip ranks
-        F.round(
-            F.coalesce(cosine(F.col(vec_col), F.col("_qvec")), F.lit(0.0)), 6
-        ).alias("score"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return np.array([[float(x) for x in r[0]] for r in rows], dtype=np.float64)
 
 
-def _cell_assign_udf(cent_vecs: "np.ndarray", cent_norms: "np.ndarray"):
-    """argmax-cosine cell id as a vectorized pandas UDF.
+def _unit_rows(m: "np.ndarray") -> "np.ndarray":
+    """Row-normalised float64 copy of a centroid matrix; a zero row stays
+    zero instead of dividing by zero."""
+    m = np.asarray(m, dtype=np.float64)
+    norms = np.linalg.norm(m, axis=1)
+    norms[norms == 0] = 1.0
+    return m / norms[:, None]
 
-    The centroid matrix rides in the UDF closure (pickled once per task,
-    k x dim floats — KBs), so the Catalyst plan carries exactly ONE
-    expression node no matter how many cells or dimensions: at 64 cells x
-    1024 dims the former literal-array formulation emitted ~65k plan nodes
-    and died in analysis/codegen long before data volume mattered. One
-    batch matmul + argmax replaces k interpreted higher-order folds per row.
-    First-max tie order matches the old ``array_position(arr, array_max)``."""
-    unit = (cent_vecs / cent_norms[:, None]).astype(np.float64)
+
+def _cell_assign_udf(cents: "np.ndarray"):
+    """argmax-cosine cell id as a vectorized pandas UDF. The centroid
+    matrix rides in the closure (pickled once per task, KBs), so the plan
+    carries ONE expression node whatever the cells x dims (a literal-array
+    formulation emitted ~65k nodes at 64 x 1024). Ties go to the first
+    max."""
+    unit = _unit_rows(cents)
 
     @F.pandas_udf(T.IntegerType())
     def assign(v: pd.Series) -> pd.Series:
@@ -118,14 +165,12 @@ def _cell_assign_udf(cent_vecs: "np.ndarray", cent_norms: "np.ndarray"):
     return assign
 
 
-def _probe_cells_udf(
-    cent_vecs: "np.ndarray", cent_norms: "np.ndarray", n_probe: int
-):
+def _probe_cells_udf(cents: "np.ndarray", n_probe: int):
     """Top-``n_probe`` nearest cell ids as a vectorized pandas UDF (same
     closure-broadcast centroid matrix as :func:`_cell_assign_udf`). Probe
     selection stays executor-side so the query frame is never collected to
     the driver. Ties break toward the lower cell id (stable argsort)."""
-    unit = (cent_vecs / cent_norms[:, None]).astype(np.float64)
+    unit = _unit_rows(cents)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def probes(v: pd.Series) -> pd.Series:
@@ -144,6 +189,46 @@ def _probe_cells_udf(
     return probes
 
 
+def _ivf_index(
+    corpus: DataFrame, n_cells: int, centroids: "np.ndarray | None",
+    corpus_id: str, vec_col: str,
+) -> "tuple[np.ndarray, DataFrame]":
+    """An IVF index as (centroid matrix, assigned corpus
+    ``(corpus_id, vec_col, cell)``): the two artifacts
+    ``ann_index.save_ivf_index`` writes, held in memory. A null or
+    ragged embedding gets a null cell and is never a candidate."""
+    cents = (
+        _seed_centroids(corpus, n_cells, corpus_id, vec_col)
+        if centroids is None
+        else np.asarray(centroids, dtype=np.float64)
+    )
+    assigned = corpus.select(
+        corpus_id, vec_col, _cell_assign_udf(cents)(F.col(vec_col)).alias("cell")
+    )
+    return cents, assigned
+
+
+def _ivf_probes(
+    queries: DataFrame, cents: "np.ndarray", n_probe: int, query_id: str, vec_col: str
+) -> DataFrame:
+    """``(query_id, _qvec, cell)``: one row per probed cell of each query.
+
+    The probe array is materialized in its own projection, then
+    explode_outer + null-filter: a plain explode over a deterministic UDF
+    makes Catalyst inject a size()>0 pre-filter that re-evaluates the UDF
+    (pinned by tests/test_plans.py for the chunkers; same shape here). A
+    query with a bad embedding has no probes and so no results."""
+    return (
+        queries.select(
+            F.col(query_id),
+            F.col(vec_col).alias("_qvec"),
+            _probe_cells_udf(cents, n_probe)(F.col(vec_col)).alias("_cells"),
+        )
+        .select(query_id, "_qvec", F.explode_outer("_cells").alias("cell"))
+        .filter(F.col("cell").isNotNull())
+    )
+
+
 def train_centroids(
     corpus: DataFrame,
     dim: int,
@@ -154,24 +239,16 @@ def train_centroids(
 ) -> np.ndarray:
     """Distributed Lloyd iterations for IVF centroids.
 
-    Init = first n_cells vectors by id (deterministic). Each iteration:
-    assign cells JVM-side (argmax over literal centroids), per-cell means
-    via dim per-element averages (one shuffle on the cell id), collect the
+    Init = the shared hash-ordered seeds (:func:`_seed_centroids`). Each
+    iteration: assign cells (the closure-matrix UDF), per-cell means via
+    dim per-element averages (one shuffle on the cell id), collect the
     k x dim result (tiny) and fold into the next plan. Empty cells keep
     their previous centroid. 3 iterations = 3 jobs; the corpus is scanned,
     never collected."""
-    cents = np.array(
-        [
-            [float(x) for x in r[0]]
-            for r in corpus.select(vec_col).orderBy(corpus_id).limit(n_cells).collect()
-        ],
-        dtype=np.float64,
-    )
+    cents = _seed_centroids(corpus, n_cells, corpus_id, vec_col)
     for _ in range(n_iters):
-        norms = np.linalg.norm(cents, axis=1)
-        norms[norms == 0] = 1.0
         assigned = corpus.withColumn(
-            "_cell", _cell_assign_udf(cents, norms)(F.col(vec_col))
+            "_cell", _cell_assign_udf(cents)(F.col(vec_col))
         )
         # per-cell per-dimension means via posexplode + groupBy(cell, dim):
         # avg is partially aggregatable, so the shuffle carries only
@@ -209,69 +286,20 @@ def topk_ivf(
     """IVF-style approximate top-k: partition the corpus into cells around
     centroids, probe only the n_probe cells nearest each query.
 
-    Centroids are a deterministic sample (first n_cells corpus vectors by
-    id) — a kmeans stand-in that keeps the operator dependency-free; swap in
-    trained centroids without touching the plan. Cell assignment AND probe
-    selection are vectorized pandas UDFs carrying the centroid matrix in
-    their closure (one batch matmul + argmax / stable top-n_probe argsort
-    per Arrow batch; plan size is O(1) in cells x dims) — the query side is
-    never collected to the driver, so ``queries`` may be a full table, not
-    just a search batch. Drop the broadcast hints if the query side
-    outgrows broadcast size.
+    Centroids default to the shared hash-ordered seeds (a kmeans stand-in
+    that keeps the operator dependency-free); trained ones
+    (:func:`train_centroids`) plug into the same plan. Same probe -> join
+    -> rank code as ``ann_index.topk_ivf_indexed``; the query side is
+    never collected to the driver.
 
     Scale: corpus never moves — the only join is corpus ⋈ broadcast(probe
-    pairs) on the cell id, then per-query rank. Recall grows with n_probe
-    (n_probe = n_cells degenerates to exact brute force).
-    """
-    if centroids is None:
-        cent_vecs = np.array(
-            [
-                [float(x) for x in r[0]]
-                for r in corpus.select(vec_col)
-                .orderBy(corpus_id)
-                .limit(n_cells)
-                .collect()
-            ],
-            dtype=np.float64,
-        )
-    else:
-        cent_vecs = np.asarray(centroids, dtype=np.float64)
-    cent_norms = np.linalg.norm(cent_vecs, axis=1)
-    cent_norms[cent_norms == 0] = 1.0
-
-    c = corpus.withColumn(
-        "_cell", _cell_assign_udf(cent_vecs, cent_norms)(F.col(vec_col))
+    rows) on the cell id, then per-query rank. Recall grows with n_probe
+    (n_probe = n_cells degenerates to exact brute force)."""
+    cents, assigned = _ivf_index(corpus, n_cells, centroids, corpus_id, vec_col)
+    probes = _ivf_probes(queries, cents, n_probe, query_id, vec_col)
+    return _probe_join_topk(
+        assigned, probes, "cell", k, query_id, corpus_id, vec_col
     )
-
-    # materialize the probe array in its own projection, then explode_outer
-    # + null-filter: a plain explode over a deterministic UDF makes Catalyst
-    # inject a size()>0 pre-filter that re-evaluates the UDF (pinned by
-    # tests/test_plans.py for the chunkers; same shape here)
-    probes = (
-        queries.select(
-            F.col(query_id),
-            _probe_cells_udf(cent_vecs, cent_norms, n_probe)(
-                F.col(vec_col)
-            ).alias("_cells"),
-        )
-        .select(F.col(query_id), F.explode_outer("_cells").alias("_cell"))
-        .filter(F.col("_cell").isNotNull())
-    )
-    qvecs = queries.select(F.col(query_id), F.col(vec_col).alias("_qvec"))
-
-    scored = (
-        c.join(F.broadcast(probes), "_cell")
-        .join(F.broadcast(qvecs), query_id)
-        .select(
-            query_id,
-            corpus_id,
-            F.round(
-                F.coalesce(cosine(F.col(vec_col), F.col("_qvec")), F.lit(0.0)), 6
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> "np.ndarray":
@@ -309,6 +337,45 @@ def lsh_bucket(vec: Column, dim: int, n_planes: int = 8, seed: int = 42) -> Colu
     return bucket_udf_for(_hyperplanes(dim, n_planes, seed))(vec)
 
 
+def _lsh_index(
+    corpus: DataFrame, dim: int, n_planes: int, seed: int, corpus_id: str, vec_col: str
+) -> "tuple[np.ndarray, DataFrame]":
+    """An LSH index as (hyperplane matrix, assigned corpus
+    ``(corpus_id, vec_col, bucket)``): the two artifacts
+    ``ann_index.save_lsh_index`` writes, held in memory."""
+    planes = _hyperplanes(dim, n_planes, seed)
+    assigned = corpus.select(
+        corpus_id, vec_col, bucket_udf_for(planes)(F.col(vec_col)).alias("bucket")
+    )
+    return planes, assigned
+
+
+def _lsh_probes(
+    queries: DataFrame, planes: "np.ndarray", n_probe_bits: int, query_id: str,
+    vec_col: str,
+) -> DataFrame:
+    """``(query_id, _qvec, bucket)``: each query's own bucket plus, for
+    multi-probe, the buckets one flip away in each of its first
+    ``n_probe_bits`` sign bits. The bucket UDF runs ONCE per query row in
+    its own projection; the XOR fan-out reads the materialized column. A
+    query with a bad embedding (null bucket) has no probes: the null filter
+    sits above the explode so Catalyst cannot push it onto the UDF and
+    evaluate it twice."""
+    base = F.col("_b0")
+    probe_arr = F.array(
+        base, *[base.bitwiseXOR(F.lit(1 << i)) for i in range(n_probe_bits)]
+    )
+    return (
+        queries.select(
+            F.col(query_id),
+            F.col(vec_col).alias("_qvec"),
+            bucket_udf_for(planes)(F.col(vec_col)).alias("_b0"),
+        )
+        .select(query_id, "_qvec", F.explode(probe_arr).alias("bucket"))
+        .filter(F.col("bucket").isNotNull())
+    )
+
+
 def topk_lsh(
     queries: DataFrame,
     corpus: DataFrame,
@@ -327,33 +394,10 @@ def topk_lsh(
     multi-probe (``n_probe_bits`` > 0) -> each query also probes the
     buckets reachable by flipping one of its first ``n_probe_bits`` sign
     bits (the nearest neighboring half-spaces). Multi-probe multiplies the
-    query side only — the corpus is bucketed once and never moves."""
-    c = corpus.withColumn("_bucket", lsh_bucket(F.col(vec_col), dim, n_planes, seed))
-    # bucket UDF evaluated ONCE per query row in its own projection; the
-    # XOR probe fan-out then references the materialized column (cheap
-    # bit ops), never re-running the UDF per probe
-    base = F.col("_b0")
-    probes = F.array(
-        base, *[base.bitwiseXOR(F.lit(1 << i)) for i in range(n_probe_bits)]
+    query side only — the corpus is bucketed once and never moves. Same
+    probe -> join -> rank code as ``ann_index.topk_lsh_indexed``."""
+    planes, assigned = _lsh_index(corpus, dim, n_planes, seed, corpus_id, vec_col)
+    probes = _lsh_probes(queries, planes, n_probe_bits, query_id, vec_col)
+    return _probe_join_topk(
+        assigned, probes, "bucket", k, query_id, corpus_id, vec_col
     )
-    q = (
-        queries.select(
-            F.col(query_id),
-            F.col(vec_col).alias("_qvec"),
-            lsh_bucket(F.col(vec_col), dim, n_planes, seed).alias("_b0"),
-        )
-        .select(
-            F.col(query_id),
-            F.col("_qvec"),
-            F.explode(probes).alias("_bucket"),
-        )
-    )
-    scored = c.join(F.broadcast(q), "_bucket").select(
-        query_id,
-        corpus_id,
-        F.round(
-            F.coalesce(cosine(F.col(vec_col), F.col("_qvec")), F.lit(0.0)), 6
-        ).alias("score"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

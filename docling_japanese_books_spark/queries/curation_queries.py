@@ -223,8 +223,9 @@ def ann_ivf_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned assignment artifact tables, then search the LOADED index —
     the corpus is never re-assigned (plan pinned by tests/test_ann_index).
     Probing all 8 cells makes the persisted search exhaustive, so the
-    oracle is exact brute-force top-3; partial-probe equality with the
-    in-memory operator is pinned by pytest."""
+    oracle is exact brute-force top-3; partial-probe save -> load fidelity
+    (the loaded index answers as the one it was saved from) is pinned by
+    pytest."""
     import os
     import tempfile
 

@@ -50,7 +50,9 @@ def query(name: str, oracle: Optional[str] = None):
 # every spark.read.parquet call (~0.11 s warm, measured), and the bench
 # rebuilds each query from scratch per rep — 1-3 scans per query made
 # relation resolution the largest fixed per-rep cost. Every action on a
-# memoized frame still scans parquet; no row-level data is cached.
+# memoized frame still scans parquet; no row-level data is cached. Each
+# entry is stamped with the table's (mtime, size) on disk, so a table
+# rewritten within the session is resolved afresh, never served stale.
 _SCAN_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
 
 
@@ -60,10 +62,11 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         per = _SCAN_MEMO.setdefault(spark, {})
     except TypeError:  # non-weakrefable session stand-in: skip the memo
         return spark.read.parquet(path)
-    df = per.get(path)
-    if df is None:
-        df = per[path] = spark.read.parquet(path)
-    return df
+    stamp = _table_stat(path)
+    hit = per.get(path)
+    if hit is None or hit[0] != stamp:
+        hit = per[path] = (stamp, spark.read.parquet(path))
+    return hit[1]
 
 
 # Fan-out ceiling: above this on-disk size the file splitter already hands
@@ -74,18 +77,28 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _FAN_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_FAN_MAX_BYTES", str(1 << 30)))
 
 
+def _table_stat(path: str) -> "tuple[int, int] | None":
+    """(newest mtime in ns, total file bytes) of a local parquet file or
+    directory; None when unknowable cheaply (non-local path)."""
+    p = Path(path)
+    try:
+        if p.is_file():
+            st = p.stat()
+            return st.st_mtime_ns, st.st_size
+        if p.is_dir():
+            files = [f.stat() for f in p.rglob("*") if f.is_file()]
+            mtime = max([p.stat().st_mtime_ns] + [f.st_mtime_ns for f in files])
+            return mtime, sum(f.st_size for f in files)
+    except OSError:
+        pass
+    return None
+
+
 def _table_bytes(sf_dir: str, name: str) -> int:
     """On-disk footprint of a fixture table; -1 when unknowable cheaply
     (non-local path) — callers then assume 'big' and skip the fan."""
-    p = Path(sf_dir) / f"{name}.parquet"
-    try:
-        if p.is_file():
-            return p.stat().st_size
-        if p.is_dir():
-            return sum(f.stat().st_size for f in p.rglob("*") if f.is_file())
-    except OSError:
-        pass
-    return -1
+    stat = _table_stat(f"{sf_dir}/{name}.parquet")
+    return stat[1] if stat else -1
 
 
 def tfan(spark: SparkSession, sf_dir: str, name: str, *part_cols: str) -> DataFrame:

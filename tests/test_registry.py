@@ -145,3 +145,26 @@ def test_demoted_surrogates_are_green_in_latest_correctness():
         f"demoted queries whose surrogates are not green in {files[-1].name}: "
         f"{problems}"
     )
+
+
+def test_scan_memo_serves_rewritten_table_afresh(spark, tmp_path):
+    """``t()`` memoizes resolved scans per session; a table rewritten
+    within the session must be resolved afresh (new rows), never served
+    from the memo as the old relation."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from docling_japanese_books_spark.queries.relational import t
+
+    d = str(tmp_path)
+    spark.range(3).write.parquet(f"{d}/spark_dir.parquet")
+    assert t(spark, d, "spark_dir").count() == 3
+    assert t(spark, d, "spark_dir") is t(spark, d, "spark_dir")  # memo hit
+    spark.range(10, 15).write.mode("overwrite").parquet(f"{d}/spark_dir.parquet")
+    assert sorted(r.id for r in t(spark, d, "spark_dir").collect()) == [10, 11, 12, 13, 14]
+
+    # single-file layout, as the fixture tables are written
+    pq.write_table(pa.table({"id": [1, 2]}), f"{d}/one_file.parquet")
+    assert t(spark, d, "one_file").count() == 2
+    pq.write_table(pa.table({"id": [7, 8, 9]}), f"{d}/one_file.parquet")
+    assert sorted(r.id for r in t(spark, d, "one_file").collect()) == [7, 8, 9]

@@ -180,7 +180,7 @@ def test_bruteforce_ranks_on_rounded_score(spark):
         assert r.score == round(r.score, 6)
 
 
-def test_null_and_ragged_embeddings_degrade_not_crash(spark, emb):
+def test_null_and_ragged_embeddings_degrade_not_crash(spark, emb, tmp_path):
     """ADVICE r4: a null or length-mismatched embedding element must map
     to a null cell/bucket (row silently excluded from candidates), never
     TypeError the whole task — one bad row was killing topk_ivf/topk_lsh."""
@@ -206,3 +206,35 @@ def test_null_and_ragged_embeddings_degrade_not_crash(spark, emb):
     bad_q = bad.select(F.col("vec_id").alias("query_id"), "embedding")
     assert topk_ivf(bad_q, corpus, dim=64, k=3, n_cells=8, n_probe=2).count() == 0
     assert topk_lsh(bad_q, corpus, dim=64, k=3, n_planes=6).count() == 0
+
+    # the persisted indexes: save -> search over the same corpus. The bad
+    # rows land in the null (__HIVE_DEFAULT_PARTITION__) cell/bucket, which
+    # no probe ever names, so they are written but never returned.
+    import os
+
+    from docling_japanese_books_spark.operators.ann_index import (
+        save_ivf_index,
+        save_lsh_index,
+        topk_ivf_indexed,
+        topk_lsh_indexed,
+    )
+
+    ivf, lsh = str(tmp_path / "ivf"), str(tmp_path / "lsh")
+    save_ivf_index(corpus, ivf, n_cells=8)
+    save_lsh_index(corpus, lsh, dim=64, n_planes=6)
+    for path, key in ((ivf, "cell"), (lsh, "bucket")):
+        null_part = f"{path}/assignments/{key}=__HIVE_DEFAULT_PARTITION__"
+        assert os.path.isdir(null_part), os.listdir(f"{path}/assignments")
+        stored = spark.read.parquet(f"{path}/assignments")
+        assert {
+            r.vec_id for r in stored.filter(F.col(key).isNull()).collect()
+        } == {9001, 9002}
+
+    for out in (
+        topk_ivf_indexed(spark, queries, ivf, k=3, n_probe=8).collect(),
+        topk_lsh_indexed(spark, queries, lsh, k=3).collect(),
+    ):
+        assert {r.query_id: r.vec_id for r in out if r.rank == 1} == {10: 10, 20: 20}
+        assert all(r.vec_id < 9000 for r in out)
+    assert topk_ivf_indexed(spark, bad_q, ivf, k=3, n_probe=2).count() == 0
+    assert topk_lsh_indexed(spark, bad_q, lsh, k=3).count() == 0
